@@ -661,18 +661,14 @@ class DocumentStore:
         return DocumentStore(reread.drop("valid_date", "namespace"), self._now)
 
     # -- persistence (A5 document-store sink) ---------------------------
-    def save(self, path: str, partitioned: bool = True) -> None:
+    def save(self, path: str) -> None:
         """Persist the version log as parquet, partitioned by entity
         namespace + date(valid_from) so as-of reads prune partitions
         (SURVEY §4 #3; plan-asserted in test_docs)."""
-        df = self.versions
-        if partitioned:
-            df = df.withColumn(
-                "namespace", F.element_at(F.split("id", "/"), 1)
-            ).withColumn("valid_date", F.to_date("valid_from"))
-            df.write.mode("overwrite").partitionBy("namespace", "valid_date").parquet(path)
-        else:
-            df.write.mode("overwrite").parquet(path)
+        df = self.versions.withColumn(
+            "namespace", F.element_at(F.split("id", "/"), 1)
+        ).withColumn("valid_date", F.to_date("valid_from"))
+        df.write.mode("overwrite").partitionBy("namespace", "valid_date").parquet(path)
         # stamp the post-write data fingerprint (r15 — the durable-state
         # face of the ANN-sidecar contract): load()/open_partitioned()
         # verify it, so a version log mutated OUTSIDE the engine can

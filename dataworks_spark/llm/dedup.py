@@ -94,6 +94,45 @@ def token_hashes(text: Column) -> Column:
     return F.transform(F.split(text, " "), lambda t: F.xxhash64(t))
 
 
+def _pair_struct(x: Column, y: Column) -> Column:
+    return F.struct(x.alias("doc_a"), y.alias("doc_b"))
+
+
+def _emit_pairs(ds: Column, pair=_pair_struct) -> Column:
+    """The C(k,2) (earlier, later) pairs of the sorted id list ``ds``,
+    exploded one struct per row with row-local array combinatorics —
+    the bucket→pairs step every kernel here shares (co-occurrence,
+    MinHash buckets, winnow postings). ``pair(x, y)`` builds the struct
+    from two list elements; the default is ``(doc_a, doc_b)``."""
+    return F.explode(
+        F.flatten(
+            F.transform(
+                ds,
+                lambda x, i: F.transform(
+                    F.slice(ds, i + 2, F.size(ds)), lambda y: pair(x, y)
+                ),
+            )
+        )
+    )
+
+
+def _small_buckets(rel: DataFrame, keys: list, max_bucket: int) -> DataFrame:
+    """The ``keys`` of the buckets of ``rel`` holding 2..``max_bucket``
+    rows — the shared hot-bucket guard (r12): sizes fold with map-side
+    combine (shuffle = |buckets|) and callers semi-join the result
+    BEFORE collecting or self-joining, so an over-cap bucket never
+    builds its doc list. A bucket of one emits no pair, so dropping it
+    never changes the pair output."""
+    if max_bucket < 1:
+        raise ValueError(f"max_bucket must be >= 1, got {max_bucket}")
+    return (
+        rel.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__bn"))
+        .filter((F.col("__bn") > 1) & (F.col("__bn") <= max_bucket))
+        .drop("__bn")
+    )
+
+
 def cooccurrence_pairs(
     tokens: DataFrame,
     id_col: str,
@@ -124,7 +163,7 @@ def cooccurrence_pairs(
     pairs."""
     if size_col is None:
         ds = F.array_sort(F.collect_list(id_col))
-        pair = lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))  # noqa: E731
+        pair = _pair_struct
         group_cols = ["p.doc_a", "p.doc_b"]
     else:
         # array_sort on structs orders by fields left-to-right → by id
@@ -145,19 +184,7 @@ def cooccurrence_pairs(
         tokens.groupBy(token_col)
         .agg(ds.alias("ds"))
         .filter(keep)
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ds"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                            lambda y: pair(x, y),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+        .select(_emit_pairs(F.col("ds"), pair).alias("p"))
         .groupBy(*group_cols)
         .agg(F.count(F.lit(1)).alias("inter"))
     )
@@ -171,7 +198,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     method: str = "auto",
     parts: int = 8,
-    stream_pairs_min: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity join: distinct shingles per doc,
     |A∩B| / (|A|+|B|-|A∩B|) ≥ threshold, with A/B the xxhash64'd
@@ -217,11 +243,20 @@ def ngram_jaccard_pairs(
     τ decay, or keeps τ ≥ 2-3 and lets each part run longer. The
     default 8 keeps τ=3 for ~100-shingle documents at t=0.3.
 
-    ``stream_pairs_min`` (r16): part-local pair count past which the
-    kernel switches from the full-buffer radix count to the streaming
-    two-pass count whose memory is CHUNK-bounded regardless of part
-    size (default :data:`PIGEONHOLE_STREAM_PAIRS_MIN`; both arms emit
-    bit-identical candidates — pinned in tests).
+    Past :data:`PIGEONHOLE_STREAM_PAIRS_MIN` part-local pairs (read
+    when the plan is built) the kernel switches from the full-buffer
+    radix count to the streaming two-pass count whose memory is
+    CHUNK-bounded regardless of part size; both arms emit bit-identical
+    candidates (pinned in tests).
+
+    Plan building RUNS A SPARK JOB on the pigeonhole path: the
+    candidate relation is checkpointed and counted (``cand.count()``)
+    before the verify joins are planned, because the count picks
+    broadcast or shuffle verify joins
+    (:data:`PIGEONHOLE_VERIFY_BROADCAST_MAX`). Calling this function
+    therefore pays the part shuffle and the Arrow kernel once, and the
+    returned frame holds that one-shot checkpoint. The ``"cooccur"``
+    path builds lazily.
 
     Scale note: exact pairwise Jaccard is only run on candidate sets
     (or bounded subsets); at 100 TB the candidate generation is
@@ -246,8 +281,7 @@ def ngram_jaccard_pairs(
                 "use method='cooccur'"
             )
         return _ngram_jaccard_pigeonhole(
-            df, id_col, text_col, n, threshold, parts, id_dtype,
-            stream_pairs_min=stream_pairs_min,
+            df, id_col, text_col, n, threshold, parts, id_dtype
         )
     hs = shingle_hashes(F.col(text_col), n)
     sh = df.select(F.col(id_col).alias("doc"), hs.alias("hs")).select(
@@ -270,6 +304,7 @@ def ngram_jaccard_pairs(
 #: buffer + radix workspace is ~1 GB of per-worker fresh-touch, the
 #: regime where allocation, not arithmetic, dominates on slow-fault
 #: hosts — and past the threshold it keeps growing as Σk²/(2·parts).
+#: Module-level so tests can force the streaming arm.
 PIGEONHOLE_STREAM_PAIRS_MIN = 64_000_000
 
 #: above this many candidate pairs the pigeonhole verify joins switch
@@ -289,7 +324,6 @@ def _ngram_jaccard_pigeonhole(
     threshold: float,
     parts: int,
     id_dtype: str,
-    stream_pairs_min: int | None = None,
 ) -> DataFrame:
     """Pigeonhole candidate generation + exact JVM verify (see
     :func:`ngram_jaccard_pairs`). The kernel is fully self-contained
@@ -319,10 +353,7 @@ def _ngram_jaccard_pigeonhole(
     t = float(threshold)
     n_parts = int(parts)
     # captured at plan-build time so tests can pin the streaming arm
-    s_min = int(
-        PIGEONHOLE_STREAM_PAIRS_MIN if stream_pairs_min is None
-        else stream_pairs_min
-    )
+    s_min = int(PIGEONHOLE_STREAM_PAIRS_MIN)
 
     def _kernel(tbl: "pa.Table") -> "pa.Table":
         # Keep the kernel's large transient buffers in the malloc arena
@@ -1230,7 +1261,7 @@ def minhash_band_survivors(
     sig: DataFrame, n_hashes: int = 64, bands: int = 16,
     max_bucket: int = 2,
 ) -> DataFrame:
-    """The (band, bhash) keys whose bucket size is ≤ ``max_bucket`` —
+    """The (band, bhash) keys whose bucket holds 2..``max_bucket`` docs —
     the hot-bucket guard's survivor set as a STANDALONE relation, so a
     deployment that stores its sketches at ingest can store the bucket
     histogram verdict next to them (r15, the winnow-postings pattern):
@@ -1241,14 +1272,8 @@ def minhash_band_survivors(
     stage semi-joins it instead of re-folding bucket sizes (and
     instead of holding its own one-shot checkpoint). Caller
     materializes (persist/save) — same contract as the postings."""
-    if max_bucket < 1:
-        raise ValueError(f"max_bucket must be >= 1, got {max_bucket}")
-    return (
-        _minhash_banded(sig, n_hashes, bands)
-        .groupBy("band", "bhash")
-        .agg(F.count(F.lit(1)).alias("__bn"))
-        .filter(F.col("__bn") <= max_bucket)
-        .drop("__bn")
+    return _small_buckets(
+        _minhash_banded(sig, n_hashes, bands), ["band", "bhash"], max_bucket
     )
 
 
@@ -1287,51 +1312,22 @@ def minhash_pairs_from_signatures(
     # r13 shared-subplan note), and the signature arrays (64 longs ≈
     # 20× the key width) never ride the bucket exchange: they are
     # attached to the DEDUPED candidates by two joins against the
-    # narrow sig relation the caller already materialized. The inline
-    # max_bucket guard rides the same groupBy (`size(ds) <= cap`), so
-    # this path no longer folds bucket sizes in a separate
-    # checkpointed pass — identical pairs, no per-call one-shot state.
-    if max_bucket is not None and max_bucket < 1:
-        raise ValueError(f"max_bucket must be >= 1, got {max_bucket}")
+    # narrow sig relation the caller already materialized.
     banded = _minhash_banded(sig, n_hashes, bands).drop("sig")
-    if survivors is not None:
-        banded = banded.join(survivors, ["band", "bhash"], "left_semi")
-    elif max_bucket is not None:
+    if survivors is None and max_bucket is not None:
         # r16 (r15 VERDICT #5): pre-aggregate bucket sizes and
         # semi-join BEFORE the collect_list so a degenerate hot bucket
         # never materializes its full doc array in one aggregation
         # buffer (guide §2.2/§2.5 — a single enormous key cannot be
         # split downstream; it must be dropped before collection).
-        # Size-1 buckets are dropped here too — they emit no pairs —
-        # so the final pair set is identical to the post-collect
-        # ``size(ds) <= max_bucket`` filter this replaces (pinned in
-        # test_llm's capped-vs-survivors equality).
-        surv = (
-            banded.groupBy("band", "bhash")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter((F.col("__bn") > 1) & (F.col("__bn") <= max_bucket))
-            .drop("__bn")
-        )
-        banded = banded.join(surv, ["band", "bhash"], "left_semi")
-    grouped = banded.groupBy("band", "bhash").agg(
-        F.array_sort(F.collect_list("doc")).alias("ds")
-    )
-    keep = F.size("ds") > 1
+        survivors = _small_buckets(banded, ["band", "bhash"], max_bucket)
+    if survivors is not None:
+        banded = banded.join(survivors, ["band", "bhash"], "left_semi")
     cand = (
-        grouped.filter(keep)
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ds"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                            lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+        banded.groupBy("band", "bhash")
+        .agg(F.array_sort(F.collect_list("doc")).alias("ds"))
+        .filter(F.size("ds") > 1)
+        .select(_emit_pairs(F.col("ds")).alias("p"))
         .select("p.doc_a", "p.doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
@@ -1464,31 +1460,6 @@ def simhash(text: Column, bits: int = 64, use_arrow: bool | None = None) -> Colu
     )
 
 
-def _cap_buckets(
-    rel: DataFrame, keys: list, max_bucket: int | None
-) -> DataFrame:
-    """Drop LSH buckets larger than ``max_bucket`` before a self-join
-    (the shared 100 TB hot-bucket guard, r12): bucket sizes fold with
-    map-side combine (shuffle = |buckets|), survivors attach via one
-    linear semi-join. ``None`` = no capping (exact historical
-    behavior)."""
-    if max_bucket is None:
-        return rel
-    if max_bucket < 1:
-        raise ValueError(f"max_bucket must be >= 1, got {max_bucket}")
-    small = (
-        rel.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__bn"))
-        .filter(F.col("__bn") <= max_bucket)
-        .drop("__bn")
-        # both sides of the downstream self-join read the capped
-        # relation — materialize the survivor keys once (|buckets|
-        # rows) so the size fold doesn't run once per side (r13)
-        .localCheckpoint(eager=False)
-    )
-    return rel.join(small, keys, "left_semi")
-
-
 def simhash_near_dup_pairs(
     df: DataFrame, id_col: str, text_col: str, band_bits: int = 16,
     max_bucket: int | None = None,
@@ -1560,7 +1531,14 @@ def hamming_near_dup_pairs(
     )
     if checkpoint:
         quarters = quarters.localCheckpoint(eager=False)
-    quarters = _cap_buckets(quarters, ["q", "qv"], max_bucket)
+    if max_bucket is not None:
+        # both sides of the self-join below read the capped relation —
+        # materialize the survivor keys once (|buckets| rows) so the
+        # size fold doesn't run once per side (r13)
+        small = _small_buckets(quarters, ["q", "qv"], max_bucket)
+        quarters = quarters.join(
+            small.localCheckpoint(eager=False), ["q", "qv"], "left_semi"
+        )
     a = quarters.select(F.col("doc").alias("doc_a"), F.col("fp").alias("fp_a"), "q", "qv")
     b = quarters.select(F.col("doc").alias("doc_b"), F.col("fp").alias("fp_b"), "q", "qv")
     return (
@@ -1805,19 +1783,20 @@ def winnow_fingerprint_relation(
 
 
 def winnow_postings(fps: DataFrame, max_keep_df: int | None = None) -> DataFrame:
-    """(doc, fp) → the POSTINGS relation ``(fp, ds)`` with ``ds`` the
-    sorted doc-id list per fingerprint — the materialized form of the
-    pair kernel's FIRST shuffle (groupBy fp), factored out so it is
-    paid once per corpus, not once per audit policy (r15; the policy
-    knobs — ``max_df``, ``min_shared`` — are all DOWNSTREAM of this
-    group: a df-cap is a filter on ``size(ds)``, so every policy bands
-    the same stored postings with zero re-shuffle of the corpus-sized
-    relation). Singleton postings (size 1 — most of natural text) are
-    KEPT here: they are what makes the stored asset reusable for
-    containment/df statistics; the pairing stage drops them for free.
+    """(doc, fp) → the POSTINGS relation ``(fp, ds, df)`` with ``ds``
+    the sorted doc-id list per fingerprint and ``df`` its exact
+    document frequency (long) — the materialized form of the pair
+    kernel's FIRST shuffle (groupBy fp), factored out so it is paid
+    once per corpus, not once per audit policy (r15; the policy knobs —
+    ``max_df``, ``min_shared`` — are all DOWNSTREAM of this group: a
+    df-cap is a filter on ``df``, so every policy bands the same stored
+    postings with zero re-shuffle of the corpus-sized relation).
+    Singleton postings (df 1 — most of natural text) are KEPT here:
+    they are what makes the stored asset reusable for containment/df
+    statistics; the pairing stage drops them for free.
 
     This is the durable sibling of the MinHash signature checkpoint:
-    at 100 TB the deployment stores ``(fp, ds)`` at ingest
+    at 100 TB the deployment stores the postings at ingest
     (:func:`save_winnow_postings`) and every contamination/overlap run
     pays only the pair-side shuffle, which ``max_df`` bounds.
 
@@ -1826,18 +1805,20 @@ def winnow_postings(fps: DataFrame, max_keep_df: int | None = None) -> DataFrame
     aggregation buffer — at corpus scale one boilerplate fingerprint
     with df in the millions materializes a single multi-million-element
     array row during the asset build (guide §2.2: a single enormous
-    key no mitigation can split). With ``max_keep_df`` set, df is
-    pre-counted per fingerprint and hot fingerprints are dropped from
-    the collect by an anti-join BEFORE aggregation; the output gains an
-    exact ``df`` column (long) and hot rows are kept as
+    key no mitigation can split). With ``max_keep_df`` set, a window
+    over fp counts df and keeps only ONE row of each hot fingerprint
+    BEFORE the collect aggregate, and hot rows are kept as
     ``(fp, ds=NULL, df)`` so the stored asset still serves df
     statistics. Any policy with ``max_df ≤ max_keep_df`` reads
     identical pairs; :func:`winnow_pairs_from_postings` refuses loudly
-    (row-level raise) if asked to band past the cap. Default ``None``
-    preserves the legacy ``(fp, ds)`` schema and single-shuffle build."""
+    (row-level raise) if asked to band past the cap. Both forms build
+    with one fp-keyed exchange."""
     if max_keep_df is None:
+        # count("doc") skips NULL ids exactly as collect_list does, so
+        # df == size(ds) on every row
         return fps.groupBy("fp").agg(
-            F.array_sort(F.collect_list("doc")).alias("ds")
+            F.array_sort(F.collect_list("doc")).alias("ds"),
+            F.count("doc").alias("df"),
         )
     if max_keep_df < 1:
         raise ValueError(f"max_keep_df must be >= 1, got {max_keep_df}")
@@ -1874,52 +1855,31 @@ def winnow_postings(fps: DataFrame, max_keep_df: int | None = None) -> DataFrame
 def winnow_pairs_from_postings(
     postings: DataFrame, min_shared: int = 2, max_df: int = 50
 ) -> DataFrame:
-    """Policy stage over prebuilt postings: df-cap filter (row-local —
-    no shuffle), C(k,2) pair emission with row-local array
-    combinatorics, one pair-keyed shuffle to count shared
-    fingerprints. Output identical to :func:`winnow_overlap_pairs`
-    (equivalence pinned in tests).
-
-    Accepts both postings schemas: the legacy ``(fp, ds)`` and the
-    df-capped ``(fp, ds, df)`` (:func:`winnow_postings` with
-    ``max_keep_df``). On the capped schema the df filter uses the exact
-    stored count, and a surviving row whose ``ds`` was truncated away
-    (``max_df`` exceeds the build's ``max_keep_df``) raises at
-    execution rather than silently dropping its pairs."""
-    pair = lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))  # noqa: E731
-    if "df" in postings.columns:
-        kept = postings.filter(
-            (F.col("df") > 1) & (F.col("df") <= max_df)
-        ).withColumn(
-            "ds",
-            F.when(
-                F.col("ds").isNull(),
-                F.raise_error(
-                    F.lit(
-                        "winnow_pairs_from_postings: max_df exceeds the "
-                        "postings' max_keep_df — rebuild the postings with "
-                        "a larger cap"
-                    )
-                ).cast(postings.schema["ds"].dataType),
-            ).otherwise(F.col("ds")),
-        )
-    else:
-        kept = postings.filter((F.size("ds") > 1) & (F.size("ds") <= max_df))
-    return (
-        kept
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ds"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                            lambda y: pair(x, y),
-                        ),
-                    )
+    """Policy stage over prebuilt :func:`winnow_postings`: df-cap
+    filter on the exact stored ``df`` (row-local — no shuffle), C(k,2)
+    pair emission with row-local array combinatorics, one pair-keyed
+    shuffle to count shared fingerprints. Output identical to
+    :func:`winnow_overlap_pairs` (equivalence pinned in tests). A
+    surviving row whose ``ds`` was truncated away (``max_df`` exceeds
+    the build's ``max_keep_df``) raises at execution rather than
+    silently dropping its pairs."""
+    kept = postings.filter(
+        (F.col("df") > 1) & (F.col("df") <= max_df)
+    ).withColumn(
+        "ds",
+        F.when(
+            F.col("ds").isNull(),
+            F.raise_error(
+                F.lit(
+                    "winnow_pairs_from_postings: max_df exceeds the "
+                    "postings' max_keep_df — rebuild the postings with "
+                    "a larger cap"
                 )
-            ).alias("p")
-        )
+            ).cast(postings.schema["ds"].dataType),
+        ).otherwise(F.col("ds")),
+    )
+    return (
+        kept.select(_emit_pairs(F.col("ds")).alias("p"))
         .groupBy("p.doc_a", "p.doc_b")
         .agg(F.count(F.lit(1)).alias("inter"))
         .filter(F.col("inter") >= min_shared)
@@ -2000,10 +1960,10 @@ def winnow_overlap_pairs(
     documents before pairing (the paper's own advice for boilerplate):
     a fingerprint shared by k docs emits C(k,2) pairs, so the pair
     space is bounded by Σ C(df ≤ max_df, 2) instead of the hub blowup.
-    Pairing reuses :func:`cooccurrence_pairs` with its ``max_df`` cap —
-    two shuffles, no self-join. Composition of the two stages above;
-    multi-policy callers should build the fingerprint relation once
-    and band each policy off it."""
+    Pairing goes through :func:`winnow_postings` and
+    :func:`winnow_pairs_from_postings` — two shuffles, no self-join.
+    Composition of the two stages above; multi-policy callers should
+    build the fingerprint relation once and band each policy off it."""
     return winnow_pairs_from_fingerprints(
         winnow_fingerprint_relation(df, text_col, id_col, shingle_n, window),
         min_shared=min_shared,

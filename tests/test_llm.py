@@ -36,7 +36,7 @@ def test_word_ngrams_short_text(spark):
     assert sorted(r.n for r in out) == [0, 2]  # shorter than n → empty
 
 
-def test_ngram_pigeonhole_matches_cooccurrence(spark, docs):
+def test_ngram_pigeonhole_matches_cooccurrence(spark, docs, monkeypatch):
     """r15: the pigeonhole candidate/verify execution of
     ngram_jaccard_pairs must return BIT-IDENTICAL (pair, inter,
     jaccard) rows to the pure-JVM co-occurrence twin — on the fixture
@@ -86,18 +86,22 @@ def test_ngram_pigeonhole_matches_cooccurrence(spark, docs):
                 )
             )
             assert got == want, f"threshold={th} parts={parts}"
-    # r16: the STREAMING counting arm (past stream_pairs_min the kernel
-    # never materializes the full pair buffer) must emit the same
-    # candidates — force it for every part shape on the planted skew
-    for parts in (1, 4):
-        got = rows(
-            ngram_jaccard_pairs(
-                df, "doc_id", "text", 3, 0.2, method="pigeonhole",
-                parts=parts, stream_pairs_min=0,
+    # r16: the STREAMING counting arm (past PIGEONHOLE_STREAM_PAIRS_MIN
+    # the kernel never materializes the full pair buffer) must emit the
+    # same candidates — force it for every part shape on the planted skew
+    from dataworks_spark.llm import dedup as D
+
+    with monkeypatch.context() as m:
+        m.setattr(D, "PIGEONHOLE_STREAM_PAIRS_MIN", 0)
+        for parts in (1, 4):
+            got = rows(
+                ngram_jaccard_pairs(
+                    df, "doc_id", "text", 3, 0.2, method="pigeonhole",
+                    parts=parts,
+                )
             )
-        )
-        want = rows(ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.2, method="cooccur"))
-        assert got == want, f"streaming arm parts={parts}"
+            want = rows(ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.2, method="cooccur"))
+            assert got == want, f"streaming arm parts={parts}"
     # schema parity (inter must stay long; ids keep the input dtype) —
     # simpleString level: nullability metadata legitimately differs
     # (count() is non-nullable, the verify-join size() is not), and the
@@ -107,7 +111,7 @@ def test_ngram_pigeonhole_matches_cooccurrence(spark, docs):
     assert a.schema.simpleString() == b.schema.simpleString()
 
 
-def test_ngram_pigeonhole_chunk_boundary(spark):
+def test_ngram_pigeonhole_chunk_boundary(spark, monkeypatch):
     """r15 session 5: the kernel's counting scan walks the radix-sorted
     pair buffer in 4 M-pair slices with small reused temporaries — this
     pins the slice-boundary logic (a duplicate run or singleton whose
@@ -140,10 +144,12 @@ def test_ngram_pigeonhole_chunk_boundary(spark):
     assert got == want
     # r16: same multi-slice family through the STREAMING counting arm —
     # its cross-slice bitmap + exact recount must agree bit-for-bit
+    from dataworks_spark.llm import dedup as D
+
+    monkeypatch.setattr(D, "PIGEONHOLE_STREAM_PAIRS_MIN", 0)
     got_stream = rows(
         ngram_jaccard_pairs(
-            df, "doc_id", "text", 3, 0.3, method="pigeonhole", parts=1,
-            stream_pairs_min=0,
+            df, "doc_id", "text", 3, 0.3, method="pigeonhole", parts=1
         )
     )
     assert got_stream == want
@@ -3767,9 +3773,11 @@ def test_winnow_postings_max_keep_df_hot_key(spark):
     (fp, ds=NULL, exact df) so the stored asset still serves df
     statistics, pair outputs are unchanged for every policy within the
     cap, and banding PAST the cap raises instead of silently dropping
-    pairs. Plan check: the capped build's collect aggregate sits above
-    the df-fold anti-join, so the hot fp's doc list never enters an
-    aggregation buffer."""
+    pairs. Both builds share one ``(fp, ds, df)`` schema. Plan check:
+    the capped build's collect aggregate sits above the df-counting
+    window, whose filter keeps one row of a hot fp, so the hot fp's
+    doc list never enters an aggregation buffer — and the window and
+    the aggregate share ONE fp-keyed exchange, with no join."""
     import pytest
 
     from dataworks_spark.llm.dedup import (
@@ -3791,6 +3799,8 @@ def test_winnow_postings_max_keep_df_hot_key(spark):
     assert capped.schema.simpleString() == (
         "struct<fp:string,ds:array<bigint>,df:bigint>"
     )
+    assert legacy.schema.simpleString() == capped.schema.simpleString()
+    assert legacy.filter(F.size("ds") != F.col("df")).count() == 0
 
     def key(df):
         return sorted((r.doc_a, r.doc_b, r.n_shared) for r in df.collect())
@@ -3813,12 +3823,15 @@ def test_winnow_postings_max_keep_df_hot_key(spark):
         winnow_pairs_from_postings(capped, max_df=30).count()
     with pytest.raises(ValueError, match="max_keep_df"):
         winnow_postings(fps, max_keep_df=0)
-    # plan: the collect_list aggregate reads the anti-joined (capped)
-    # relation — the join sits BELOW the object aggregate
+    # plan: the collect_list aggregate reads the window-filtered
+    # (capped) relation — the Window sits BELOW the object aggregate,
+    # and both reuse one fp-keyed exchange
     plan = capped._jdf.queryExecution().executedPlan().toString()
     agg_pos = plan.find("collect_list")
-    join_pos = plan.find("Join")
-    assert 0 <= agg_pos < join_pos, plan[:2000]
+    window_pos = plan.find("Window")
+    assert 0 <= agg_pos < window_pos, plan[:2000]
+    assert plan.count("Exchange hashpartitioning(fp") == 1, plan[:2000]
+    assert "Join" not in plan, plan[:2000]
 
 
 def test_minhash_inline_cap_filters_before_collect(spark):

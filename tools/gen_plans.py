@@ -38,7 +38,7 @@ HEADLINE = [
 
     ("q_interval_join", "Bucketized interval join: intervals exploded onto overlapped time buckets, HASH equi-join on the bucket with containment as the join residual - the keyless range join that never plans a nested loop."),
 
-    ("q_contamination_report", "Contamination audit trio (r15 postings split): the report branch broadcasts eval shingles into one corpus scan; both winnow policy branches band the fingerprint-keyed POSTINGS asset - the df-cap is a size(ds) filter PUSHED INTO the InMemoryTableScan and the only per-policy shuffle is pair-keyed (the groupBy-fp exchange lives in the asset, paid once at ingest)."),
+    ("q_contamination_report", "Contamination audit trio (r15 postings split): the report branch broadcasts eval shingles into one corpus scan; both winnow policy branches band the fingerprint-keyed POSTINGS asset - the df-cap is a filter on the stored df column PUSHED INTO the InMemoryTableScan and the only per-policy shuffle is pair-keyed (the groupBy-fp exchange lives in the asset, paid once at ingest)."),
 ]
 
 
